@@ -14,18 +14,30 @@ from py4j.protocol import Py4JJavaError
 
 
 def box() -> dict:
-    """Size the run to the machine: ``local[nproc]``, a heap of a quarter
-    of MemTotal (1 to 4 GB) and one shuffle partition per core."""
+    """Size the run to the machine: ``local[nproc - 1]`` (one core stays
+    free for the driver, the JIT compiler and GC), a heap of a quarter of
+    MemTotal (1 to 4 GB) and one shuffle partition per core."""
     nproc = len(os.sched_getaffinity(0))
     with open("/proc/meminfo") as f:
         kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
     mem_gb = kb / 2**20
     return {
         "nproc": nproc,
+        "cores": max(1, nproc - 1),
         "mem_gb": round(mem_gb, 1),
         "heap_gb": int(min(4, max(1, mem_gb // 4))),
         "shuffle_partitions": nproc,
     }
+
+
+def process_age_s() -> float:
+    """Seconds since this process started (``/proc``, 10 ms ticks), so
+    that interpreter start and imports count towards set-up time."""
+    with open("/proc/self/stat") as f:
+        start_ticks = int(f.read().rsplit(")", 1)[1].split()[19])
+    with open("/proc/uptime") as f:
+        uptime = float(f.read().split()[0])
+    return uptime - start_ticks / os.sysconf("SC_CLK_TCK")
 
 
 def _children(pid: int) -> list[int]:
@@ -79,13 +91,16 @@ def peak_rss_mb() -> float:
     return total_kb / 1024
 
 
-def tail(values: list[float]) -> tuple[float, float, int] | None:
-    """Highest percentile with at least ten samples beyond it:
-    ``(value, percentile, n)``, or None under eleven samples."""
-    n = len(values)
-    if n < 11:
-        return None
-    return sorted(values)[n - 11], 100.0 * (n - 10) / n, n
+def cpu_ticks() -> tuple[int, int]:
+    """``(steal, total)`` CPU ticks of the whole machine from
+    ``/proc/stat``: steal is time the hypervisor ran someone else."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
+
+
+def steal_pct(t0: tuple[int, int], t1: tuple[int, int]) -> float:
+    return 100.0 * (t1[0] - t0[0]) / max(1, t1[1] - t0[1])
 
 
 def median(values: list[float]) -> float:

@@ -1,16 +1,18 @@
 """Crawl-path benchmark: one workload per run, in one fresh process.
 
-    python3 perfbench/run.py --workload crawl_waves --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload crawl_waves --seed 1 --seconds 20 --trace 0
 
 Run from the repository root.  The run sizes Spark to the machine
-(``local[nproc]``, heap from MemTotal), sets up the workload several
-times, warms up untimed, then measures whole units of work for
-``--seconds``.  It prints a report, then as its last line one JSON
+(``local[nproc - 1]``, heap from MemTotal), sets up the workload several
+times, warms up untimed, then measures as many whole units of work
+as fit ``--seconds``.  It prints a report, then as its last line one JSON
 object: ``correct``, ``attempted`` and ``failed`` steps, and the
 end-to-end metrics (``--trace 0``) or the per-layer metrics
 (``--trace 1``, which times an untraced phase and then a traced one,
 and reports the traced step median over the untraced one as
-``trace.overhead_ratio``).  See README.md in this directory.
+``trace.overhead_ratio``).  ``setup_s`` is the time from process
+start to the first timed step: JVM start, one set-up (the median of the
+repetitions) and the warm-up.  See README.md in this directory.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUPS = 3  # set-up repetitions; setup_s is their median
+SETUPS = 3  # set-up repetitions; setup_s counts their median
 
 
 def _load_spec() -> dict:
@@ -51,6 +53,7 @@ def main(argv: list[str] | None = None) -> int:
     import probes
     from workloads import WORKLOADS
 
+    t_process = time.perf_counter() - probes.process_age_s()
     box = probes.box()
     work = os.path.join(ROOT, ".perfbench_work", f"run-{os.getpid()}")
     tmp = os.path.join(work, "tmp")
@@ -69,20 +72,20 @@ def main(argv: list[str] | None = None) -> int:
     spark = None
     started: list[int] = []
     try:
-        t0 = time.perf_counter()
         spark = get_spark(
             app_name="perfbench",
-            master=f"local[{box['nproc']}]",
+            master=f"local[{box['cores']}]",
             shuffle_partitions=box["shuffle_partitions"],
             extra_conf={"spark.sql.warehouse.dir": os.path.join(work, "warehouse")},
         )
         spark.sparkContext.setLogLevel("ERROR")
-        session_s = time.perf_counter() - t0
+        startup_s = time.perf_counter() - t_process
         gateway = spark.sparkContext._gateway
 
         wl = WORKLOADS[args.workload](spark, args.seed, work)
         setups = []
-        for _ in range(SETUPS):
+        # setup_s is an end-to-end metric; a traced run sets up once
+        for _ in range(1 if args.trace else SETUPS):
             t0 = time.perf_counter()
             wl.setup()
             setups.append(time.perf_counter() - t0)
@@ -90,7 +93,9 @@ def main(argv: list[str] | None = None) -> int:
         wl.warmup()
         warmup_s = time.perf_counter() - t0
 
+        ticks0 = probes.cpu_ticks()
         ph = wl.run(args.seconds, traced=False)
+        steal = probes.steal_pct(ticks0, probes.cpu_ticks())
         traced = wl.run(args.seconds, traced=True) if args.trace else None
         rss = probes.peak_rss_mb()
     finally:
@@ -112,21 +117,20 @@ def main(argv: list[str] | None = None) -> int:
         print(f"perfbench: processes {left} did not exit", file=sys.stderr)
         return 3
 
-    step_tail = probes.tail(ph.steps)
+    setup_s = startup_s + probes.median(setups) + warmup_s
     report = {
         "workload": args.workload,
         "seed": args.seed,
         "box": box,
-        "session_start_s": session_s,
+        "startup_s": startup_s,
         "setup_runs_s": setups,
         "warmup_s": warmup_s,
+        "setup_s": setup_s,
         "steps": len(ph.steps),
         "step_s": ph.steps,
         "busy_s": ph.busy_s,
-        "step_tail": (
-            {"value_s": step_tail[0], "percentile": step_tail[1], "samples": step_tail[2]}
-            if step_tail else f"undefined under 11 steps ({len(ph.steps)})"
-        ),
+        "steal_pct": steal,
+        "step_tail": f"undefined: {len(ph.steps)} steps, 11 needed",
         "fail_ratio": ph.failed / max(1, ph.attempted),
         "check_errors": ph.errors + (traced.errors if traced else []),
     }
@@ -136,7 +140,7 @@ def main(argv: list[str] | None = None) -> int:
         spec_metrics = spec["per_layer"]
         values = {m["name"]: 0.0 for m in spec_metrics}
         values.update(traced.layers)
-        values["session.start_s"] = session_s
+        values["session.start_s"] = startup_s
         untraced_p50 = probes.median(ph.steps)
         values["trace.overhead_ratio"] = (
             probes.median(traced.steps) / untraced_p50 if untraced_p50 else 0.0
@@ -147,7 +151,7 @@ def main(argv: list[str] | None = None) -> int:
         values = {
             "urls_per_s": ph.completed / ph.busy_s if ph.busy_s else 0.0,
             "step_p50_s": probes.median(ph.steps),
-            "setup_s": probes.median(setups),
+            "setup_s": setup_s,
             "peak_rss_mb": rss,
         }
     metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]} for m in spec_metrics}

@@ -30,17 +30,22 @@ def _canonical(raw: str) -> str:
     return f"{scheme.lower()}://{host.lower()}{path}?{'&'.join(sorted(query.split('&')))}"
 
 
+def _stream(seed: int, n_batches: int):
+    g = gen.StreamGenerator(seed)
+    return g.history(), [g.batch(b) for b in range(1, n_batches + 1)]
+
+
 @pytest.mark.parametrize("seed", [1, 42])
 def test_same_seed_same_bytes(seed):
     a, b = gen.crawl_inputs(seed), gen.crawl_inputs(seed)
     assert _digest(a.pages, a.seeds) == _digest(b.pages, b.seeds)
     assert gen.crawl_expected(a) == gen.crawl_expected(b)
-    a, b = gen.bulk_inputs(seed), gen.bulk_inputs(seed)
-    assert _digest(a.frontier, a.seen) == _digest(b.frontier, b.seen)
+    (ha, ba), (hb, bb) = _stream(seed, 4), _stream(seed, 4)
+    assert _digest(ha.frame, *[x.frame for x in ba]) == _digest(hb.frame, *[x.frame for x in bb])
 
 
 def test_seeds_differ():
-    assert _digest(gen.bulk_inputs(1).frontier) != _digest(gen.bulk_inputs(2).frontier)
+    assert _digest(_stream(1, 1)[1][0].frame) != _digest(_stream(2, 1)[1][0].frame)
     assert _digest(gen.crawl_inputs(1).pages) != _digest(gen.crawl_inputs(2).pages)
 
 
@@ -50,27 +55,40 @@ def test_crawl_shape(seed):
     # hot-host budget per wave is fixed whatever crawl-delay the seed drew
     assert c.wave_seconds // c.hot_delay_s == gen.CRAWL_BUDGET
     # equal chains: CRAWL_PAGES pages plus the terminal fetch each
-    assert len(c.seeds) == gen.CRAWL_SEEDS > gen.CRAWL_BUDGET
+    # the gate never defers: no wave holds more chains than the budget
+    assert len(c.seeds) == gen.CRAWL_SEEDS <= gen.CRAWL_BUDGET
     fetches, _emissions = gen.crawl_expected(c)
     assert len(fetches) == gen.CRAWL_SEEDS * (gen.CRAWL_PAGES + 1)
     assert list(c.seeds["seed_index"]) == list(range(gen.CRAWL_SEEDS))
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_bulk_shape(seed):
-    b = gen.bulk_inputs(seed)
-    n_seen = int(gen.BULK_URLS * gen.BULK_SEEN_SHARE)
-    assert len(b.frontier) == gen.BULK_URLS and len(b.seen) == n_seen
-    canon = b.frontier["raw_url"].map(_canonical)
-    assert canon.is_unique and b.seen["fetch_url"].is_unique
-    assert canon.isin(set(b.seen["fetch_url"])).sum() == n_seen
-    fresh = canon[~canon.isin(set(b.seen["fetch_url"]))]
-    hot_fresh = fresh.str.startswith(f"https://{gen.HOT_HOST}/").sum()
-    assert hot_fresh == int((gen.BULK_URLS - n_seen) * gen.BULK_HOT_SHARE)
-    assert b.expected_scheduled == gen.BULK_BUDGET + len(fresh) - hot_fresh
-    assert b.expected_deferred == hot_fresh - gen.BULK_BUDGET > 0
-    # no cold host comes near the budget
-    cold = fresh[~fresh.str.startswith(f"https://{gen.HOT_HOST}/")]
-    assert cold.str.extract(r"//([^/]+)/")[0].value_counts().max() < gen.BULK_BUDGET
-    # every raw URL carries a port, a fragment and an unsorted query
-    assert b.frontier["raw_url"].str.contains(r":443/.*\?offset=\d+&l=en-US#").all()
+def test_stream_shape(seed):
+    E = gen.STREAM_REBUILD_EVERY
+    hist, batches = _stream(seed, 2 * E + 1)
+    assert len(hist.frame) == len(set(hist.fresh)) == gen.STREAM_HISTORY
+    assert set(hist.frame["url"].map(_canonical)) == set(hist.fresh)
+    scheduled = set(hist.fresh)
+    for b in batches:
+        canon = b.frame["url"].map(_canonical)
+        fresh = set(b.fresh)
+        assert len(fresh) == len(b.fresh)
+        assert not fresh & scheduled
+        # re-discoveries come only from URLs the program already scheduled
+        old = canon[~canon.isin(fresh)]
+        assert len(old) == gen.STREAM_REDISCOVERED and old.isin(scheduled).all()
+        # in-batch duplicates: a second spelling of some fresh URLs
+        assert canon.isin(fresh).sum() == len(fresh) + gen.STREAM_IN_BATCH_DUPS
+        # the same scheduled count every batch; the hot-host carry
+        # follows the cycle position and is empty at each cycle's end
+        pos = (b.batch_id - 1) % E
+        assert b.expected_scheduled == gen.STREAM_BUDGET + gen.STREAM_COLD_FRESH
+        assert (b.expected_deferred == 0) == (pos == E - 1)
+        cold = [u for u in fresh if not u.startswith(f"https://{gen.HOT_HOST}/")]
+        assert len(cold) == gen.STREAM_COLD_FRESH
+        if pos == E - 1:
+            scheduled |= {u for x in batches[b.batch_id - E : b.batch_id] for u in x.fresh}
+    # raw spellings carry ports, fragments, unsorted queries and upper case
+    raw = batches[0].frame["url"]
+    for pattern in (":443/", "#frag", r"\?offset=", "^HTTPS://"):
+        assert raw.str.contains(pattern).any()

@@ -1,12 +1,15 @@
 """The benchmark workloads.  Each one sets up through the program's
-public functions, warms up untimed, runs whole units of work (admission
-steps, crawls) until the requested seconds have passed, and checks
-every unit's output against an answer derived from the generator.
+public functions, warms up untimed, runs whole units of work (crawls,
+rebuild cycles of micro-batches) and checks every unit's output against
+an answer derived from the generator.  A run does as many units as fit
+the requested seconds at the unit's nominal duration on a 4-core box,
+and at least one, so that every run of a workload does the same work.
 
 Layers are timed only from outside, around calls into each module's
 public functions.  With ``traced`` set, a step also materialises the
-layer boundaries it can reach (each stage of the admission, or the wave
-loop's injectable fetcher and store), which untraced steps never do.
+layer boundaries it can reach (the wave loop's injectable fetcher and
+store, or the stream's canonicalize, Bloom and gate functions replayed
+on the batch), which untraced steps never do.
 """
 
 from __future__ import annotations
@@ -14,13 +17,14 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import statistics
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
 import gen
-from probes import SparkCounters, StepCounters, dir_bytes_files, median
+from probes import SparkCounters, dir_bytes_files, median
 from crawler_apple_podcast_spark.datagen.corpus import to_spark
 from crawler_apple_podcast_spark.functions.urls import canonicalize_url
 from crawler_apple_podcast_spark.operators.bloom import (
@@ -35,6 +39,12 @@ from crawler_apple_podcast_spark.plans.wave_loop import (
     make_join_fetcher,
     run_crawl,
 )
+from crawler_apple_podcast_spark.streaming.frontier_stream import (
+    StreamConfig,
+    process_candidate_batch,
+    reset_seen_state,
+    seen_state_stats,
+)
 
 
 @dataclass
@@ -42,12 +52,17 @@ class Phase:
     """What one timed phase measured."""
 
     steps: list[float] = field(default_factory=list)  # seconds per step
-    completed: int = 0        # URLs fetched (crawl) or admitted (bulk)
+    completed: int = 0        # URLs fetched (crawl) or scheduled (stream)
     busy_s: float = 0.0       # time inside the program's calls
     attempted: int = 0
     failed: int = 0
     layers: dict[str, float] = field(default_factory=dict)
     errors: list[dict] = field(default_factory=list)  # what the failed checks found
+
+
+def units(seconds: float, unit_s: float) -> int:
+    """Whole units of work that fit ``seconds`` at ``unit_s`` each, at least one."""
+    return max(1, round(seconds / unit_s))
 
 
 def _spark_means(counters: list, layers: dict) -> None:
@@ -136,6 +151,8 @@ class CrawlWaves:
     """``run_crawl`` with politeness and a SnapshotStore, to frontier
     exhaustion, over a generated Apple-Podcasts corpus.  A step is a wave."""
 
+    UNIT_S = 16.0  # nominal seconds of one timed crawl (CRAWL_PAGES + 1 waves)
+
     # Untimed waves of one partial crawl before timing: the first waves
     # of a fresh JVM run several times slower than steady state.
     WARMUP_WAVES = 2
@@ -206,8 +223,7 @@ class CrawlWaves:
         counters = SparkCounters(self.spark) if traced else None
         fetch_s, commit_s, self_s, bytes_, files, steps_c = [], [], [], [], [], []
         rows = hits = sched = deferred = episodes = 0
-        t_end = time.perf_counter() + seconds
-        while time.perf_counter() < t_end:
+        for _ in range(units(seconds, self.UNIT_S)):
             try:
                 root, store, fetcher, out, wall = self._crawl(self.cfg, counters)
             except Exception as e:  # a crawl that raises is a failed step; go on
@@ -248,153 +264,230 @@ class CrawlWaves:
         return ph
 
 
-# ---------------------------------------------------------------- bulk_admit
+# --------------------------------------------------------------- stream_admit
 
 
-class BulkAdmit:
-    """One large skewed frontier of raw URLs per step, through
-    ``canonicalize_url`` -> Bloom build over the seen set and
-    ``bloom_gated_anti_join(confirm_on="hashes")`` -> ``politeness_gate``.
-    A step is one admission of the whole frontier."""
+@dataclass
+class _LayerProbe:
+    """Per-batch layer timings, replayed on the batch's candidates with
+    each boundary materialised (traced runs only)."""
 
-    WARMUP_STEPS = 1
+    canonicalize_s: list[float] = field(default_factory=list)
+    rows: list[int] = field(default_factory=list)
+    build_s: list[float] = field(default_factory=list)
+    probe_confirm_s: list[float] = field(default_factory=list)
+    confirm_bytes: list[int] = field(default_factory=list)
+    gate_s: list[float] = field(default_factory=list)
+    gate_bytes: list[int] = field(default_factory=list)
+    suspects: int = 0
+    in_base: int = 0
+    probed: int = 0
+    scheduled: int = 0
+    deferred: int = 0
+    design_fp: float = 0.0
+
+
+class StreamAdmit:
+    """Discovery micro-batches through ``process_candidate_batch``
+    against a seen history admitted through the program before timing.
+    Batches carry re-discovered URLs and second spellings of their own
+    fresh URLs.  A step is a micro-batch; timing covers whole rebuild
+    cycles."""
+
+    E = gen.STREAM_REBUILD_EVERY
+    UNIT_S = 20.0  # nominal seconds of one timed rebuild cycle
 
     def __init__(self, spark, seed: int, work: str):
-        self.spark, self.seed = spark, seed
-        self.frontier = None
+        self.spark, self.seed, self.work = spark, seed, work
+        self._n_setups = 0
+        self.root = None
+        self.history = None
+
+    def _load(self, batch: gen.StreamBatch):
+        df = self.spark.createDataFrame(
+            batch.frame, "url STRING, priority INT, discovered_ts TIMESTAMP"
+        ).cache()
+        df.count()
+        return df
+
+    def _dir(self, kind: str, batch_id: int) -> str:
+        base = self.cfg.resolved_carry_dir() if kind == "carry" else getattr(self.cfg, f"{kind}_dir")
+        return f"{base}/batch_id={batch_id}"
+
+    def _check_batch(self, batch: gen.StreamBatch, ph: Phase | None) -> bool:
+        read = self.spark.read.parquet
+        got = (read(self._dir("out", batch.batch_id)).count(),
+               read(self._dir("carry", batch.batch_id)).count())
+        want = (batch.expected_scheduled, batch.expected_deferred)
+        if got != want and ph is not None:
+            ph.errors.append({"batch": batch.batch_id, "scheduled_deferred": got, "expected": want})
+        return got == want
 
     def setup(self) -> None:
-        inputs = gen.bulk_inputs(self.seed)
-        frontier = self.spark.createDataFrame(inputs.frontier, "raw_url STRING, priority INT").cache()
-        seen = self.spark.createDataFrame(inputs.seen, "fetch_url STRING").cache()
-        frontier.count()
-        self.n_seen = seen.count()
-        if self.frontier is not None:
-            self.frontier.unpersist()
-            self.seen.unpersist()
-        self.inputs, self.frontier, self.seen = inputs, frontier, seen
-
-    def _admit(self):
-        """The timed step: returns the gate's outputs and the frames the
-        gated anti-join persisted, which the caller releases."""
-        caches = []
-        cand = self.frontier.select(
-            canonicalize_url(F.col("raw_url")).alias("fetch_url"), "priority"
+        """Generate the feed and load its history (batch 0) into Spark."""
+        if self.history is not None:
+            self.history.unpersist()
+        self._n_setups += 1
+        self.root = os.path.join(self.work, f"stream-{self._n_setups}")
+        self.cfg = StreamConfig(
+            seen_dir=f"{self.root}/seen",
+            out_dir=f"{self.root}/out",
+            checkpoint_dir=f"{self.root}/checkpoint",
+            default_budget=gen.STREAM_BUDGET,
+            bloom_threshold=gen.STREAM_BLOOM_THRESHOLD,
+            rebuild_every=self.E,
         )
-        bloom = build_bloom_shards(self.seen, "fetch_url", expected_items=self.n_seen)
-        fresh = bloom_gated_anti_join(
-            cand, self.seen, bloom, "fetch_url", cache_registry=caches, confirm_on="hashes"
-        )
-        scheduled, deferred = politeness_gate(fresh, None, default_budget=gen.BULK_BUDGET)
-        return scheduled, deferred, scheduled.count(), caches
-
-    def _check(self, scheduled, deferred, n_scheduled: int) -> bool:
-        return (
-            n_scheduled == self.inputs.expected_scheduled
-            and deferred.count() == self.inputs.expected_deferred
-            and scheduled.join(self.seen, "fetch_url", "left_semi").count() == 0
-        )
+        self.gen = gen.StreamGenerator(self.seed)
+        self.hist_batch = self.gen.history()
+        self.expected = set(self.hist_batch.fresh)
+        self.history = self._load(self.hist_batch)
+        self.next_batch = 1
+        self.probe_state = None
 
     def warmup(self) -> None:
-        for _ in range(self.WARMUP_STEPS):
-            *_, caches = self._admit()
-            for frame in caches:
-                frame.unpersist()
+        """Admit the history through the program with a budget that
+        defers none of it, then drop the in-process seen state, as a
+        restarted stream would, and run batch 1: the first rebuild from
+        disk, with the Bloom gate on.  In a fresh JVM both run several
+        times slower than later batches."""
+        history_cfg = StreamConfig(**{**self.cfg.__dict__, "default_budget": gen.STREAM_HISTORY})
+        process_candidate_batch(self.spark, self.history, 0, history_cfg)
+        self.history.unpersist()
+        self.history = None
+        reset_seen_state(self.cfg.seen_dir)
+        self.ok = self._check_batch(self.hist_batch, None)
+        *_, ok = self._step(None, None, None)
+        self.ok = self.ok and ok
 
-    def _traced_step(self, counters: SparkCounters, L: dict):
-        """The same calls with each layer boundary materialised.  Returns
-        the step's time without the traced-only counting jobs, the
-        scheduled count, the check's verdict and the step's counters."""
-        segments = []
-
-        def timed(name, fn):
-            counters.start()
+    def _probe(self, df, batch_id: int, counters: SparkCounters, P: _LayerProbe) -> None:
+        t0 = time.perf_counter()
+        canon = df.select(canonicalize_url(F.col("url")).alias("fetch_url"), "priority").cache()
+        n = canon.count()
+        P.canonicalize_s.append(time.perf_counter() - t0)
+        P.rows.append(n)
+        if (batch_id - 1) % self.E == 0 or self.probe_state is None:
+            # the program rebuilds its Bloom gate at this batch too
+            if self.probe_state is not None:
+                self.probe_state[0].unpersist()
+            seen = self.spark.read.parquet(self.cfg.seen_dir).select("fetch_url").cache()
+            n_seen = seen.count()
             t0 = time.perf_counter()
-            out = fn()
-            L[name].append(time.perf_counter() - t0)
-            segments.append((L[name][-1], counters.stop()))
-            return out
-
-        cand = self.frontier.select(
-            canonicalize_url(F.col("raw_url")).alias("fetch_url"), "priority"
-        ).cache()
-        n = timed("urls.canonicalize_s", cand.count)
-        L["urls.rows"].append(n)
-        bloom = timed(
-            "bloom.build_s",
-            lambda: build_bloom_shards(self.seen, "fetch_url", expected_items=self.n_seen),
-        )
-        bits = bloom.m_bits * bloom.n_shards
-        L["bloom.design_fp_rate"].append((1 - math.exp(-bloom.k * bloom.n_items / bits)) ** bloom.k)
+            bloom = build_bloom_shards(
+                seen, "fetch_url", n_shards=self.cfg.bloom_shards, expected_items=n_seen
+            )
+            P.build_s.append(time.perf_counter() - t0)
+            bits = bloom.m_bits * bloom.n_shards
+            P.design_fp = (1 - math.exp(-bloom.k * bloom.n_items / bits)) ** bloom.k
+            self.probe_state = (seen, bloom)
+        seen, bloom = self.probe_state
 
         caches = []
-        fresh = bloom_gated_anti_join(
-            cand, self.seen, bloom, "fetch_url", cache_registry=caches, confirm_on="hashes"
-        ).cache()
-        timed("bloom.probe_confirm_s", fresh.count)
-        L["bloom.confirm_shuffle_bytes"].append(segments[-1][1].shuffle_write_bytes)
-        suspects = probe_bloom(cand, bloom, "fetch_url").where("maybe_seen").count()
-        in_seen = cand.join(self.seen, "fetch_url", "left_semi").count()
-        L["bloom.suspect_ratio"].append(suspects / n)
-        L["bloom.fp_rate"].append((suspects - in_seen) / (n - in_seen))
+        counters.start()
+        t0 = time.perf_counter()
+        fresh = bloom_gated_anti_join(canon, seen, bloom, "fetch_url", cache_registry=caches).cache()
+        fresh.count()
+        P.probe_confirm_s.append(time.perf_counter() - t0)
+        P.confirm_bytes.append(counters.stop().shuffle_write_bytes)
+        P.suspects += probe_bloom(canon, bloom, "fetch_url").where("maybe_seen").count()
+        P.in_base += canon.join(seen, "fetch_url", "left_semi").count()
+        P.probed += n
 
-        scheduled, deferred = politeness_gate(fresh, None, default_budget=gen.BULK_BUDGET)
-        n_scheduled = timed("politeness.gate_s", scheduled.count)
-        L["politeness.shuffle_bytes"].append(segments[-1][1].shuffle_write_bytes)
-        n_deferred = deferred.count()
-        L["politeness.deferred_ratio"].append(n_deferred / (n_scheduled + n_deferred))
-        ok = self._check(scheduled, deferred, n_scheduled)
-        for frame in [cand, fresh] + caches:
+        counters.start()
+        t0 = time.perf_counter()
+        scheduled, deferred = politeness_gate(fresh, None, default_budget=self.cfg.default_budget)
+        ns, nd = scheduled.count(), deferred.count()
+        P.gate_s.append(time.perf_counter() - t0)
+        P.gate_bytes.append(counters.stop().shuffle_write_bytes)
+        P.scheduled, P.deferred = P.scheduled + ns, P.deferred + nd
+        for frame in [canon, fresh] + caches:
             frame.unpersist()
-        total = StepCounters()
-        for _dt, c in segments:
-            total.jobs += c.jobs
-            total.tasks += c.tasks
-            total.shuffle_write_bytes += c.shuffle_write_bytes
-            total.gc_s += c.gc_s
-        return sum(dt for dt, _c in segments), n_scheduled, ok, total
+
+    def _step(self, ph: Phase | None, counters: SparkCounters | None, P: _LayerProbe | None):
+        batch = self.gen.batch(self.next_batch)
+        self.next_batch += 1
+        self.expected.update(batch.fresh)
+        df = self._load(batch)
+        if P is not None:
+            self._probe(df, batch.batch_id, counters, P)
+            counters.start()
+        before = seen_state_stats(self.cfg.seen_dir)["n_rebuilds"]
+        t0 = time.perf_counter()
+        process_candidate_batch(self.spark, df, batch.batch_id, self.cfg)
+        dt = time.perf_counter() - t0
+        c = counters.stop() if counters is not None else None
+        rebuilt = seen_state_stats(self.cfg.seen_dir)["n_rebuilds"] > before
+        df.unpersist()
+        return batch, dt, rebuilt, c, self._check_batch(batch, ph)
+
+    def _check_final(self, ph: Phase) -> bool:
+        """One exact query over everything the stream wrote: no URL
+        scheduled twice, and scheduled plus still-carried URLs are
+        exactly the distinct fresh URLs generated so far."""
+        read = self.spark.read.parquet
+        sched = [r.fetch_url for r in read(self.cfg.out_dir).select("fetch_url").collect()]
+        carry = {r.fetch_url for r in read(self._dir("carry", self.next_batch - 1)).collect()}
+        got = set(sched)
+        err = {
+            "scheduled_twice": len(sched) - len(got),
+            "scheduled_and_carried": len(got & carry),
+            "missing": len(self.expected - got - carry),
+            "unexpected": len((got | carry) - self.expected),
+        }
+        if any(err.values()) or not self.ok:
+            ph.errors.append({**err, "set_up_and_warm_up_ok": self.ok})
+            return False
+        return True
 
     def run(self, seconds: float, traced: bool) -> Phase:
         ph = Phase()
         counters = SparkCounters(self.spark) if traced else None
-        L = {name: [] for name in _BULK_LAYERS}
-        step_c = []
-        t_end = time.perf_counter() + seconds
-        while time.perf_counter() < t_end:
-            try:
-                if traced:
-                    dt, n_scheduled, ok, c = self._traced_step(counters, L)
-                    step_c.append(c)
-                else:
-                    t0 = time.perf_counter()
-                    scheduled, deferred, n_scheduled, caches = self._admit()
-                    dt = time.perf_counter() - t0
-                    ok = self._check(scheduled, deferred, n_scheduled)
-                    for frame in caches:
-                        frame.unpersist()
-            except Exception as e:  # a step that raises is a failed step; go on
+        P = _LayerProbe() if traced else None
+        tail, rebuild, growth, sink, step_c = [], [], [], [], []
+        for _ in range(units(seconds, self.UNIT_S)):
+            for _ in range(self.E):
+                try:
+                    batch, dt, rebuilt, c, ok = self._step(ph, counters, P)
+                except Exception as e:  # a batch that raises is a failed step; go on
+                    ph.attempted += 1
+                    ph.failed += 1
+                    ph.errors.append({"raised": repr(e)[:500]})
+                    continue
+                ph.steps.append(dt)
+                ph.busy_s += dt
+                ph.completed += batch.expected_scheduled
                 ph.attempted += 1
-                ph.failed += 1
-                ph.errors.append({"raised": repr(e)[:500]})
-                continue
-            if not ok:
-                ph.errors.append({"scheduled": n_scheduled, "expected": self.inputs.expected_scheduled})
-            ph.steps.append(dt)
-            ph.busy_s += dt
-            ph.completed += n_scheduled
-            ph.attempted += 1
-            ph.failed += 0 if ok else 1
+                ph.failed += 0 if ok else 1
+                if traced:
+                    (rebuild if rebuilt else tail).append(dt)
+                    if not rebuilt:
+                        growth.append(((batch.batch_id - 1) % self.E, dt))
+                    sink.append(sum(dir_bytes_files(self._dir(k, batch.batch_id))[0] for k in ("out", "seen", "carry")))
+                    step_c.append(c)
+        if not self._check_final(ph):
+            ph.failed = ph.attempted
         if traced:
-            ph.layers = {name: median(v) for name, v in L.items()}
-            _spark_means(step_c, ph.layers)
+            L = ph.layers
+            L["urls.canonicalize_s"] = median(P.canonicalize_s)
+            L["urls.rows"] = median(P.rows)
+            L["bloom.build_s"] = median(P.build_s)
+            L["bloom.probe_confirm_s"] = median(P.probe_confirm_s)
+            L["bloom.suspect_ratio"] = P.suspects / max(1, P.probed)
+            L["bloom.fp_rate"] = (P.suspects - P.in_base) / max(1, P.probed - P.in_base)
+            L["bloom.design_fp_rate"] = P.design_fp
+            L["bloom.confirm_shuffle_bytes"] = median(P.confirm_bytes)
+            L["politeness.gate_s"] = median(P.gate_s)
+            L["politeness.deferred_ratio"] = P.deferred / max(1, P.scheduled + P.deferred)
+            L["politeness.shuffle_bytes"] = median(P.gate_bytes)
+            L["frontier_stream.tail_batch_s"] = median(tail)
+            L["frontier_stream.rebuild_batch_s"] = median(rebuild)
+            if len({p for p, _ in growth}) > 1:
+                L["frontier_stream.tail_growth_s"] = statistics.linear_regression(
+                    [p for p, _ in growth], [t for _, t in growth]
+                ).slope
+            L["frontier_stream.sink_bytes_per_batch"] = median(sink)
+            L["frontier_stream.seen_base_rows"] = seen_state_stats(self.cfg.seen_dir)["n_base"]
+            _spark_means(step_c, L)
         return ph
 
 
-_BULK_LAYERS = (
-    "urls.canonicalize_s", "urls.rows", "bloom.build_s", "bloom.probe_confirm_s",
-    "bloom.suspect_ratio", "bloom.fp_rate", "bloom.design_fp_rate",
-    "bloom.confirm_shuffle_bytes", "politeness.gate_s", "politeness.deferred_ratio",
-    "politeness.shuffle_bytes",
-)
-
-WORKLOADS = {"bulk_admit": BulkAdmit, "crawl_waves": CrawlWaves}
+WORKLOADS = {"crawl_waves": CrawlWaves, "stream_admit": StreamAdmit}
